@@ -21,8 +21,6 @@ cluster is below it — threshold pinned at 0.6.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -193,7 +191,7 @@ def jaccard_pairs(
     # t (the dropped pairs cannot reach the final filter). The 1e-9
     # slack keeps the prune strictly conservative under double rounding
     # (ulp ~1e-16 at these magnitudes); A/B + identity:
-    # tools/ab_jaccard_lenfilter.py.
+    # OPTIMIZATION_r14.md.
     pairs = (
         postings.select(
             F.explode(
@@ -569,13 +567,7 @@ def _contract_partitions(pairs: DataFrame) -> DataFrame:
     return pairs.mapInPandas(contract, schema=out_schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_rounds: int = 50,
-    loop_partitions: int | None = None,
-    local_contraction: bool = True,
-    contraction: str | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     """Min-label propagation CC over an undirected pair list (doc_a, doc_b).
 
     Each round every node takes the min of its own label, its neighbors'
@@ -618,19 +610,22 @@ def connected_components(
     the driver — iteration control, not data — but no longer as its own
     job/barrier.
     100 TB: each round = one edge join + one aggregate over node-grain
-    state; localCheckpoint keeps state on executors (no DFS round-trip)
-    at the cost of recomputing-from-source on executor loss, the right
-    trade for a loop whose full restart is itself cheap next to the
-    corpus scan that produced the edges.
+    state; localCheckpoint keeps state on executors (no DFS round-trip).
+    The price is fault tolerance: localCheckpoint truncates lineage, so
+    losing an executor loses its checkpoint blocks, and the next job
+    that reads them ABORTS ("Checkpoint block ... not found") — nothing
+    recomputes the lost labels or re-runs the loop. A caller that must
+    survive worker loss re-runs the whole call; a recovery policy is an
+    open item (ROADMAP item C).
 
-    ``loop_partitions`` sizes the per-round shuffles: iteration state is
-    NODE-grain (tiny next to the corpus), and an untuned 200-partition
-    default turns every round into hundreds of near-empty tasks — the
-    same deliberate-sizing rule as the streaming STATE_PARTITIONS
-    (streaming/jobs.py). The default (``None``) sizes adaptively from the
+    The per-round shuffles are sized by ``loop_partitions``: iteration
+    state is NODE-grain (tiny next to the corpus), and an untuned
+    200-partition default turns every round into hundreds of near-empty
+    tasks — the same deliberate-sizing rule as the streaming
+    STATE_PARTITIONS (streaming/jobs.py). It is derived from the
     measured pair count (~50k pairs per partition, floor 4, cap 200) —
     the count is free because ``pairs`` must be materialized anyway (see
-    below); pass an explicit value to pin it at production scale.
+    below).
 
     ``pairs`` is persisted and counted BEFORE the union-reverse builds the
     edge list: the union's two branches otherwise each re-execute the
@@ -651,61 +646,28 @@ def connected_components(
         # coalesce an oversized shuffle down, but nothing can widen an
         # undersized one.
         n_pairs = pairs.count()  # one materialization of the DAG
-        if loop_partitions is None:
-            loop_partitions = max(4, min(200, (2 * n_pairs) // 50_000))
-        # partition-local union-find contraction (see _contract_partitions):
-        # shrinks the edge list and pre-flattens every within-partition
-        # chain to a depth-1 star BEFORE the first distributed round, on
-        # the persisted blocks' existing layout — zero added shuffle.
-        # Sizing stays on n_pairs (an upper bound on contracted edges);
-        # AQE coalesces the slack.
+        loop_partitions = max(4, min(200, (2 * n_pairs) // 50_000))
+        # Two-level partition-local union-find contraction (see
+        # _contract_partitions): contract on the persisted blocks'
+        # existing layout, then REPARTITION the already-shrunk star edges
+        # by doc_a and contract again. The first pass shrinks the edge
+        # list and pre-flattens every within-partition chain to a depth-1
+        # star with zero added shuffle; a node whose edges were scattered
+        # across upstream partitions still carries one star per
+        # partition, so grouping stars by node lets the second local
+        # union-find merge their targets, swallowing the cross-partition
+        # chains the loop would otherwise spend rounds on. The added
+        # exchange moves star edges (<= one row per distinct node per
+        # partition), NOT the corpus-scale pair list — and what it buys
+        # is distributed ROUNDS, each a full cluster barrier at 1000
+        # executors. Measured (SCALING_r13.md, 6-run interleaved both
+        # orders, outputs identical): similarity_knn_clusters 5 -> 1 CC
+        # rounds, median 6.96 -> 4.90 s at sf0.1, against the single
+        # contraction (r12) and against hash-co-locating pairs by min
+        # endpoint before contracting (3 rounds, 5.63 s). Sizing stays on
+        # n_pairs (an upper bound on contracted edges); AQE coalesces the
+        # slack.
         #
-        # `contraction` selects the pre-pass shape (round-12 verdict ask
-        # #5 — cross-partition locality ahead of round 1). Default comes
-        # from SPARK_GRAFT_CC_CONTRACTION (the A/B switch used by
-        # tools/ab_cc_locality.py) falling back to the shipped mode:
-        # - "off":   no pre-pass (the contract-invariant tests use this
-        #            via local_contraction=False)
-        # - "local": one contraction on the existing layout (shipped
-        #            r12; zero added shuffle)
-        # - "two_level": SHIPPED DEFAULT since r13 — contract, then
-        #            REPARTITION the already-shrunk star edges by doc_a
-        #            and contract again: a node whose edges were
-        #            scattered across upstream partitions carries one
-        #            star per partition; grouping stars by node lets a
-        #            second local union-find merge their targets,
-        #            swallowing the cross-partition chains the loop
-        #            would otherwise spend rounds on. The added exchange
-        #            moves star edges (<= one row per distinct node per
-        #            partition), NOT the corpus-scale pair list — and
-        #            what it buys is distributed ROUNDS, each a full
-        #            cluster barrier at 1000 executors. Measured
-        #            (SCALING_r13.md, 6-run interleaved both orders,
-        #            outputs identical): similarity_knn_clusters 5 -> 1
-        #            CC rounds, median 6.96 -> 4.90 s at sf0.1;
-        #            dedup_clusters (already 1-round under "local")
-        #            within noise.
-        # - "range": the verdict's literal suggestion — co-locate pairs
-        #            by min endpoint BEFORE contracting (hash, not
-        #            range: ids carry no component locality, so range
-        #            ordering adds only a sampling job; hashing the min
-        #            already lands every edge sharing its low endpoint
-        #            together). This one DOES exchange the full pair
-        #            list; measured slower than two_level (3 rounds,
-        #            5.63 s median on the kNN key) — kept as an A/B arm.
-        if contraction is None:
-            # The env var is an A/B switch, not a policy override: it is
-            # consulted ONLY when the caller left both knobs at their
-            # defaults. A caller that asked for no pre-pass
-            # (local_contraction=False) gets a hard "off" even if a
-            # killed A/B tool leaked SPARK_GRAFT_CC_CONTRACTION into the
-            # environment (ADVICE r13).
-            if local_contraction:
-                contraction = os.environ.get(
-                    "SPARK_GRAFT_CC_CONTRACTION", "two_level"
-                )
-            else:
-                contraction = "off"
         # Contraction task-count bound (round 14, guide §4: the Python
         # lane's cost here is per-TASK, not per-row — measured 0.3 s of
         # worker CPU per task at ~190 rows/task, 9 ms of which is the
@@ -731,22 +693,9 @@ def connected_components(
             if contract_parts < n_layout
             else pairs
         )
-        if contraction == "local":
-            loop_pairs = _contract_partitions(cpairs)
-        elif contraction == "two_level":
-            loop_pairs = _contract_partitions(
-                _contract_partitions(cpairs).repartition(
-                    loop_partitions, "doc_a"
-                )
-            )
-        elif contraction == "range":
-            loop_pairs = _contract_partitions(
-                pairs.repartition(
-                    loop_partitions, F.least("doc_a", "doc_b")
-                )
-            )
-        else:  # "off"
-            loop_pairs = pairs
+        loop_pairs = _contract_partitions(
+            _contract_partitions(cpairs).repartition(loop_partitions, "doc_a")
+        )
         with scoped_conf(
             spark, {"spark.sql.shuffle.partitions": str(loop_partitions)}
         ):
@@ -756,7 +705,8 @@ def connected_components(
 
 
 def _fingerprint_aggs():
-    """The two aggregate expressions every fingerprint form shares."""
+    """The convergence fingerprint's two aggregates: exact decimal label
+    sum and row count (see ``_fingerprint_guard``)."""
     return (
         F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -776,19 +726,6 @@ def _fingerprint_guard(s, n):
             "check's range; rescale ids before clustering"
         )
     return s
-
-
-def _fingerprint(labels: DataFrame):
-    """Exact decimal sum of labels (standalone-action form; the CC loop
-    itself folds the same aggregates into each round's checkpoint job
-    via ``DataFrame.observe`` — see ``_cc_loop``)."""
-    row = labels.agg(*_fingerprint_aggs()).collect()[0]
-    return _fingerprint_guard(row["s"], row["n"])
-
-
-#: rounds taken by the most recent _cc_loop call — A/B instrumentation
-#: (SCALING_r11/r12 round counts), never read by operator logic
-_LAST_CC_ROUNDS: int = 0
 
 
 def _cc_loop(
@@ -849,7 +786,7 @@ def _cc_loop(
     # metrics are exactly-once per successful job (task retries do not
     # double-count), and the overflow/empty disambiguation guard is
     # unchanged (_fingerprint_guard). A/B + identity:
-    # tools/ab_cc_observe.py.
+    # OPTIMIZATION_r15.md.
     seed_obs = Observation()
     labels = (
         seeded.join(seed_reps, seeded["label"] == seed_reps["rep_id"])
@@ -863,13 +800,13 @@ def _cc_loop(
     # keeps the sum exact far beyond BIGINT (which overflows around
     # 2^63/id); should even decimal(38,0) ever overflow, Spark returns
     # NULL — indistinguishable from the legitimate empty-input NULL — so
-    # _fingerprint disambiguates with the row count and RAISES rather
-    # than letting NULL == NULL masquerade as convergence.
+    # _fingerprint_guard disambiguates with the row count and RAISES
+    # rather than letting NULL == NULL masquerade as convergence.
     prev_sum = _fingerprint_guard(seed_obs.get["s"], seed_obs.get["n"])
     converged = False
     hopped = None
     try:
-        for round_no in range(1, max_rounds + 1):
+        for _ in range(max_rounds):
             # min(own label, neighbor labels) in ONE aggregate: neighbor
             # messages (edge join) unioned with the self message — no
             # second join against `labels` folding the node's own label in
@@ -910,8 +847,6 @@ def _cc_loop(
                 round_obs.get["s"], round_obs.get["n"]
             )
             labels = updated
-            global _LAST_CC_ROUNDS  # noqa: PLW0603 — instrumentation only
-            _LAST_CC_ROUNDS = round_no
             if cur_sum == prev_sum:
                 converged = True
                 break

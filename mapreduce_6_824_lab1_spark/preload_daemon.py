@@ -3,9 +3,9 @@
 Spark 4.1's ``PythonWorkerFactory`` reaps idle pooled workers after a
 HARD-CODED one minute (``IDLE_WORKER_TIMEOUT_NS = MINUTES.toNanos(1)``
 in the factory's static initializer — a constant, not a conf; verified
-against this build's bytecode and empirically via
-``tools/probe_worker_lifetime.py``: a 32-worker pool sits intact for
-60 s idle, then collapses to daemon-only within the next poll). Any
+against this build's bytecode and empirically, SCALING_r12.md: a
+32-worker pool sits intact for 60 s idle, then collapses to daemon-only
+within the next poll). Any
 Python-lane stage that starts >60 s after the previous one therefore
 pays a full pool rebuild, and the dominant rebuild cost is each fresh
 worker importing numpy/pandas/pyarrow (~0.7 s CPU per worker, N× in
@@ -33,8 +33,9 @@ whole fleet — preloading moves that cost to one import per executor
 process lifetime.
 
 The tuned session factory (:mod:`.session`) enables this module unless
-``SPARK_GRAFT_NO_PRELOAD_DAEMON`` is set (the A/B switch used by
-``tools/ab_worker_respawn.py``). The driver's own vanilla sessions are
+``SPARK_GRAFT_NO_PRELOAD_DAEMON`` is set (the deployment fallback
+:mod:`.cluster` documents; the round-12 rebuild-cost A/B is in
+SCALING_r12.md). The driver's own vanilla sessions are
 unaffected — this is an engine optimization, not a correctness path.
 """
 

@@ -1,22 +1,48 @@
-"""Pins for tools/ab_session_local_merge.py (round 14): the session-window
-local-merge knob A/B. The throughput arms are manual-run (weather-dependent);
-what tests can pin is (a) the output-identity check — the knob is a physical
-rewrite and must not change results — and (b) the order-balanced interleave
-that makes the arms weather-robust."""
+"""Pins for the session-window local-merge knob that the cluster profile
+(cluster.STREAMING_CLUSTER_CONF) turns on, after the round-14 A/B
+(SCALING_r14.md). The throughput trade is weather-dependent and lives in
+that record; what tests can pin is (a) the knob still takes effect and
+(b) it is a physical rewrite that must not change results."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_6_824_lab1_spark.cluster import STREAMING_CLUSTER_CONF
+
+CONF = next(k for k in STREAMING_CLUSTER_CONF if "sessionWindow.merge" in k)
+
 
 def test_identity_check_on_bounded_key(spark):
-    """MergingSessionsExec (conf on) must produce byte-identical results
-    to the default two-phase session merge on the bounded registry key."""
-    from tools.ab_session_local_merge import identity_check
+    """MergingSessionsExec (conf on) must produce identical results to
+    the default two-phase session merge on the bounded registry key."""
+    from mapreduce_6_824_lab1_spark import QUERIES
+    from mapreduce_6_824_lab1_spark.session import scoped_conf
 
-    ident = identity_check(spark)
-    assert ident["identical"], ident
-    assert ident["off"][0] > 0  # the fixture actually produced sessions
+    assert STREAMING_CLUSTER_CONF[CONF] == "true"
+
+    def fingerprint():
+        df = QUERIES["stream_session_window"](spark, "/root/testdata/sf0.01")
+        row = (
+            df.select(
+                F.xxhash64(
+                    *[F.col(c).cast("string") for c in sorted(df.columns)]
+                ).alias("h")
+            )
+            .agg(
+                F.sum(F.col("h").cast("decimal(38,0)")).alias("hsum"),
+                F.count(F.lit(1)).alias("rows"),
+            )
+            .collect()[0]
+        )
+        return (int(row["rows"]), int(row["hsum"]))
+
+    with scoped_conf(spark, {CONF: "false"}):
+        off = fingerprint()
+    with scoped_conf(spark, {CONF: "true"}):
+        on = fingerprint()
+    assert off == on
+    assert off[0] > 0  # the fixture actually produced sessions
 
 
 def test_conf_changes_streaming_plan(spark):
@@ -24,8 +50,6 @@ def test_conf_changes_streaming_plan(spark):
     session aggregation plans a partial-merge (sort) before the shuffle.
     Guards against the conf name rotting across Spark upgrades — if
     Spark renames it, both plans come out identical and this fails."""
-    from tools.ab_session_local_merge import CONF
-
     from mapreduce_6_824_lab1_spark.session import scoped_conf
 
     def plan():
@@ -61,16 +85,3 @@ def test_conf_changes_streaming_plan(spark):
         p_on = plan()
     assert p_off != p_on
     assert "MergingSessions" in p_on
-
-
-def test_interleave_is_order_balanced():
-    """Both orders appear: off-first and on-first alternate, so a
-    monotone host drift cannot masquerade as an arm effect."""
-    from tools.ab_session_local_merge import interleaved_order
-
-    for runs in (1, 2, 3, 4):
-        order = interleaved_order(runs)
-        assert order.count("off") == order.count("on") == runs
-        if runs >= 2:
-            firsts = [order[i] for i in range(0, len(order), 2)]
-            assert set(firsts) == {"off", "on"}

@@ -11,9 +11,20 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mapreduce_6_824_lab1_spark.operators.dedup import (
+    _cc_loop,
     connected_components,
     jaccard_pairs,
 )
+from mapreduce_6_824_lab1_spark.session import scoped_conf
+
+
+def _bare_cc_loop(pairs, max_rounds=50):
+    """The distributed CC loop with no contraction pre-pass, sized the
+    way connected_components sizes it for a small pair list."""
+    with scoped_conf(
+        pairs.sparkSession, {"spark.sql.shuffle.partitions": "4"}
+    ):
+        return _cc_loop(pairs, max_rounds=max_rounds, loop_partitions=4)
 
 
 @pytest.fixture(scope="module")
@@ -107,30 +118,15 @@ def test_connected_components_raises_without_convergence(spark):
     # a 1000-node path: label coverage grows ~4x/round under the seeded
     # + pointer-jumped loop, so 2 rounds cannot reach the fixpoint (the
     # old 12-node path stopped tripping the cap once round-11's
-    # neighbor-min seeding removed a round). Contraction is disabled:
-    # the round-12 partition-local union-find flattens each partition's
-    # chain segment to a star, and THIS test exists to cover the loop's
-    # round-cap RAISE path, which is contraction-independent.
+    # neighbor-min seeding removed a round). The loop runs bare, with no
+    # contraction pre-pass: the partition-local union-find flattens each
+    # partition's chain segment to a star, and THIS test exists to cover
+    # the loop's round-cap RAISE path, which is contraction-independent.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(999)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_rounds=2, local_contraction=False)
-
-
-def test_leaked_env_var_cannot_override_explicit_off(spark, monkeypatch):
-    """ADVICE r13: SPARK_GRAFT_CC_CONTRACTION is an A/B switch consulted
-    only when the caller left the knobs at defaults. A leaked env var
-    (an A/B tool killed between set and pop) must NOT turn an explicit
-    local_contraction=False into two_level — the two_level pre-pass
-    flattens the 999-path below, which would silently convert this raise
-    into a converge."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_CONTRACTION", "two_level")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(999)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_rounds=2, local_contraction=False)
+        _bare_cc_loop(pairs, max_rounds=2)
 
 
 def test_connected_components_round_count_pinned(spark):
@@ -299,16 +295,18 @@ def test_dedup_embedding_semantics(spark):
     assert all((r.kept_id, r.dup_id) in exact for r in got)
 
 
-@pytest.mark.parametrize("mode", ["off", "local", "two_level", "range"])
-def test_connected_components_contraction_modes_agree(spark, mode):
-    """Round-13 locality A/B (verdict ask #5): every contraction variant
-    — no pre-pass, the shipped partition-local contraction, the
-    two-level star-merge (contract, repartition stars by node, contract
-    again), and the min-endpoint pre-repartition — must reach the SAME
-    fixpoint. Graph chosen so components straddle partitions: two long
-    interleaved paths (even ids / odd ids) plus a self-loop singleton,
-    written across 8 partitions so no partition sees a whole
-    component."""
+@pytest.mark.parametrize(
+    "run",
+    [_bare_cc_loop, connected_components],
+    ids=["off", "two_level"],
+)
+def test_connected_components_contraction_modes_agree(spark, run):
+    """The bare loop (no pre-pass) and connected_components with its
+    two-level star-merge pre-pass (contract, repartition stars by node,
+    contract again) must reach the SAME fixpoint. Graph chosen so
+    components straddle partitions: two long interleaved paths (even
+    ids / odd ids) plus a self-loop singleton, written across 8
+    partitions so no partition sees a whole component."""
     edges = [(i, i + 2) for i in range(0, 60, 2)]  # even path 0..60
     edges += [(i, i + 2) for i in range(1, 61, 2)]  # odd path 1..61
     edges += [(99, 99)]  # lone self-loop: must survive as its own rep
@@ -317,7 +315,7 @@ def test_connected_components_contraction_modes_agree(spark, mode):
     ).repartition(8)
     out = {
         (r.doc_id, r.cluster_rep)
-        for r in connected_components(pairs, contraction=mode).collect()
+        for r in run(pairs).collect()
     }
     want = {(i, 0) for i in range(0, 62, 2)}
     want |= {(i, 1) for i in range(1, 62, 2)}
@@ -325,29 +323,34 @@ def test_connected_components_contraction_modes_agree(spark, mode):
     assert out == want
 
 
-def test_cc_loop_fingerprint_folds_into_checkpoint_job(spark, monkeypatch):
+#: Spark jobs _cc_loop runs on the 16-node path, measured with every
+#: round's fingerprint riding its checkpoint job: the seed and per-round
+#: checkpoints plus the AQE stage jobs under them.
+CC_LOOP_PATH16_JOBS = 31
+
+
+def test_cc_loop_fingerprint_folds_into_checkpoint_job(spark):
     """Round 15 (VERDICT r14 ask #6): the convergence fingerprint rides
-    inside each round's checkpoint job as an observed metric — _cc_loop
-    must never fall back to the standalone _fingerprint action (one extra
-    job, i.e. one extra cluster barrier, per round; measured 31 -> 27
-    jobs on the sf0.1 kNN pipeline, tools/ab_cc_observe.py). The
-    monkeypatch makes any such call explode; convergence and labels must
-    still be exact."""
-    from mapreduce_6_824_lab1_spark.operators import dedup
-    from mapreduce_6_824_lab1_spark.operators.dedup import _cc_loop
-    from mapreduce_6_824_lab1_spark.session import scoped_conf
+    inside each round's checkpoint job as an observed metric — never a
+    standalone fingerprint action (one extra job, i.e. one extra cluster
+    barrier, per round; measured 31 -> 27 jobs on the sf0.1 kNN
+    pipeline, OPTIMIZATION_r15.md). Pinned as a job count: the loop on
+    the 16-node path must run no more jobs than measured, and still
+    converge exactly."""
+    import uuid
 
-    def _boom(_labels):
-        raise AssertionError(
-            "standalone _fingerprint action called from _cc_loop — the "
-            "fingerprint must ride the checkpoint job via observe"
-        )
-
-    monkeypatch.setattr(dedup, "_fingerprint", _boom)
+    sc = spark.sparkContext
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(15)], "doc_a long, doc_b long"
     )
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-        labels = _cc_loop(pairs, max_rounds=50, loop_partitions=4)
+    group = f"cc-loop-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "cc loop job-count pin")
+    try:
+        labels = _bare_cc_loop(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= CC_LOOP_PATH16_JOBS, jobs
     rows = labels.collect()
     assert {r.cluster_rep for r in rows} == {0} and len(rows) == 16

@@ -80,26 +80,34 @@ def test_cc_fingerprint_overflow_raises(spark):
     """sum(label) is NULL both for an empty frame (converged) and for a
     decimal(38,0) overflow; the latter must RAISE, never read as
     convergence. Longs cannot overflow decimal(38,0) in any realistic
-    test, so drive the guard directly with decimal labels."""
+    test, so drive the guard directly with decimal labels, through the
+    same one-action aggregate the CC loop observes per round."""
     import pytest as _pytest
 
-    from mapreduce_6_824_lab1_spark.operators.dedup import _fingerprint
+    from mapreduce_6_824_lab1_spark.operators.dedup import (
+        _fingerprint_aggs,
+        _fingerprint_guard,
+    )
+
+    def fingerprint(labels):
+        row = labels.agg(*_fingerprint_aggs()).collect()[0]
+        return _fingerprint_guard(row["s"], row["n"])
 
     ok = spark.createDataFrame([(5,), (9,)], "label long")
-    assert _fingerprint(ok) == 14
+    assert fingerprint(ok) == 14
     empty = spark.createDataFrame([], "label long")
-    assert _fingerprint(empty) is None
+    assert fingerprint(empty) is None
     big = spark.sql(
         "SELECT CAST(repeat('9', 38) AS DECIMAL(38,0)) AS label "
         "FROM range(2)"
     )
     # ANSI mode (the Spark 4 default) already fails the overflow loudly
-    # at the engine level; the _fingerprint guard exists for non-ANSI
+    # at the engine level; the _fingerprint_guard exists for non-ANSI
     # sessions, where sum() silently returns NULL instead
     from mapreduce_6_824_lab1_spark.session import scoped_conf
 
     with _pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
-        _fingerprint(big)
+        fingerprint(big)
     with scoped_conf(spark, {"spark.sql.ansi.enabled": "false"}):
         with _pytest.raises(RuntimeError, match="fingerprint overflowed"):
-            _fingerprint(big)
+            fingerprint(big)

@@ -3,6 +3,8 @@ the generic lab-shaped map_reduce runner and the multimodal codec stubs."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
 from mapreduce_6_824_lab1_spark.catalog import load_table
@@ -83,6 +85,35 @@ def test_cluster_profile_applies(spark):
                 spark.conf.set(k, v)
             else:
                 spark.conf.unset(k)
+
+
+def test_ignored_static_conf_warns(spark):
+    """get_spark's codegen cache size is a static conf: a session built
+    before get_spark keeps its own value, and the check must say so."""
+    from types import SimpleNamespace
+
+    from mapreduce_6_824_lab1_spark.session import (
+        CODEGEN_CACHE_CONF,
+        CODEGEN_CACHE_ENTRIES,
+        _warn_ignored_static_conf,
+    )
+
+    # the tuned test session took the value: no warning
+    assert spark.conf.get(CODEGEN_CACHE_CONF) == CODEGEN_CACHE_ENTRIES
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        _warn_ignored_static_conf(spark)
+
+    # a reused vanilla session reads Spark's default of 100
+    vanilla = SimpleNamespace(
+        conf=SimpleNamespace(
+            get=lambda k: {CODEGEN_CACHE_CONF: "100"}[k]
+        )
+    )
+    with pytest.warns(UserWarning, match=CODEGEN_CACHE_CONF) as rec:
+        _warn_ignored_static_conf(vanilla)
+    assert "100" in str(rec[0].message)
+    assert CODEGEN_CACHE_ENTRIES in str(rec[0].message)
 
 
 def test_stream_runner_restores_shuffle_partitions(spark):

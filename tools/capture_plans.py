@@ -1,15 +1,14 @@
-"""Capture `.explain("formatted")` for benched query keys into plans/<round>/.
-
-The round directory defaults to r15 (override with SPARK_GRAFT_PLANS_ROUND).
+"""Capture `.explain("formatted")` for benched query keys into plans/rNN/.
 
 Round-14 optimization deliverable: the judge cannot run Spark, so every
-plan claim in OPTIMIZATION_r14.md must be checkable against committed
-explain output. Usage:
+plan claim in OPTIMIZATION_rNN.md must be checkable against committed
+explain output. The round number is required, so a new round's captures
+can never land in an old round's directory. Usage:
 
-    python tools/capture_plans.py before            # all benched keys
-    python tools/capture_plans.py after key1 key2   # just the keys touched
+    python tools/capture_plans.py 16 before            # all benched keys
+    python tools/capture_plans.py 16 after key1 key2   # just the keys touched
 
-Writes plans/r14/<key>_<tag>.txt. Driver-only work (planning, plus the
+Writes plans/r16/<key>_<tag>.txt. Driver-only work (planning, plus the
 handful of metadata-grade jobs some builders run at construction time,
 e.g. similarity_knn_graph's corpus count) — nothing is executed or
 materialized, so this is safe to run alongside other sessions.
@@ -36,10 +35,13 @@ def benched_keys() -> list[str]:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    keys = sys.argv[2:] or benched_keys()
+    if len(sys.argv) < 2 or not sys.argv[1].isdigit():
+        sys.exit("usage: capture_plans.py <round_number> [tag] [key ...]")
+    rnd = int(sys.argv[1])
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    keys = sys.argv[3:] or benched_keys()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15"))
+    out_dir = os.path.join(REPO, "plans", f"r{rnd:02d}")
     os.makedirs(out_dir, exist_ok=True)
 
     sys.path.insert(0, REPO)

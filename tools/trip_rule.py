@@ -20,7 +20,7 @@ evidentiary strength:
    sole basis for ENGINE-SUSPECT).
 
 If none of the three signals fires, the verdict is ENGINE-SUSPECT:
-bisect with tools/ab isolation runs before touching any floor. The tool
+bisect with isolated runs before touching any floor. The tool
 never edits BENCH_FLOOR.json — ratchets remain the exclusive business
 of tools/floor_medians.py.
 
@@ -272,9 +272,9 @@ def rule(
         )
         return out
     out["basis"] = (
-        "no external signal fired — bisect with isolated runs "
-        "(tools/ab_cc_locality.py / ab_worker_respawn.py pattern) before "
-        "touching any floor"
+        "no external signal fired — bisect with isolated runs, "
+        "interleaved in both orders (the SCALING_r12/r13 protocol), "
+        "before touching any floor"
     )
     return out
 
