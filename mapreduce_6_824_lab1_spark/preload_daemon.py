@@ -5,9 +5,8 @@ HARD-CODED one minute (``IDLE_WORKER_TIMEOUT_NS = MINUTES.toNanos(1)``
 in the factory's static initializer — a constant, not a conf; verified
 against this build's bytecode and empirically, SCALING_r12.md: a
 32-worker pool sits intact for 60 s idle, then collapses to daemon-only
-within the next poll). Any
-Python-lane stage that starts >60 s after the previous one therefore
-pays a full pool rebuild, and the dominant rebuild cost is each fresh
+within the next poll). Any Python-lane stage that starts >60 s after the
+previous one therefore pays a full pool rebuild, and the dominant rebuild cost is each fresh
 worker importing numpy/pandas/pyarrow (~0.7 s CPU per worker, N× in
 parallel) — measured live in WORKER_CENSUS.jsonl session r12n, where
 ``similarity_knn_clusters`` rebuilt 31 workers inside its own timing.

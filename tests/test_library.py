@@ -105,11 +105,7 @@ def test_ignored_static_conf_warns(spark):
         _warn_ignored_static_conf(spark)
 
     # a reused vanilla session reads Spark's default of 100
-    vanilla = SimpleNamespace(
-        conf=SimpleNamespace(
-            get=lambda k: {CODEGEN_CACHE_CONF: "100"}[k]
-        )
-    )
+    vanilla = SimpleNamespace(conf=SimpleNamespace(get=lambda _key: "100"))
     with pytest.warns(UserWarning, match=CODEGEN_CACHE_CONF) as rec:
         _warn_ignored_static_conf(vanilla)
     assert "100" in str(rec[0].message)

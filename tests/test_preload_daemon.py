@@ -2,8 +2,8 @@
 
 Spark 4.1 reaps idle pooled workers after a hard-coded minute
 (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS — measured live, see
-SCALING_r12.md: 33 → 1 processes between t=60 s and t=70 s idle), so every Arrow stage after a JVM-only gap rebuilds the
-pool. The tuned session routes worker forking through
+SCALING_r12.md: 33 → 1 processes between t=60 s and t=70 s idle), so
+every Arrow stage after a JVM-only gap rebuilds the pool. The tuned session routes worker forking through
 ``preload_daemon``, which imports numpy/pandas/pyarrow (and, via its
 ``-m`` parent-package import, the engine itself) once in the
 long-lived daemon so respawned workers inherit them copy-on-write.

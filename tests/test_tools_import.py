@@ -1,6 +1,7 @@
-"""Every script under tools/ imports cleanly: each guards its entry point
-with ``if __name__ == "__main__"``, so an import runs no tool, and a kept tool that still names a deleted
-engine symbol fails here instead of at its next manual run."""
+"""Every script under tools/ imports cleanly. Each guards its entry point
+with ``if __name__ == "__main__"``, so an import runs no tool, and a kept
+tool that still names a deleted engine symbol fails here instead of at
+its next manual run."""
 
 from __future__ import annotations
 
@@ -9,9 +10,8 @@ from pathlib import Path
 
 import pytest
 
-TOOLS = sorted(
-    p.stem for p in (Path(__file__).resolve().parent.parent / "tools").glob("*.py")
-)
+TOOLS_DIR = Path(__file__).resolve().parent.parent / "tools"
+TOOLS = sorted(p.stem for p in TOOLS_DIR.glob("*.py"))
 
 
 @pytest.mark.parametrize("name", TOOLS)
