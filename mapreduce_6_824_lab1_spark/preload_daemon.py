@@ -8,7 +8,8 @@ against this build's bytecode and empirically, SCALING_r12.md: a
 within the next poll). Any Python-lane stage that starts >60 s after the
 previous one therefore pays a full pool rebuild, and the dominant rebuild cost is each fresh
 worker importing numpy/pandas/pyarrow (~0.7 s CPU per worker, N× in
-parallel) — measured live in WORKER_CENSUS.jsonl session r12n, where
+parallel) — measured live in the worker census of session r12n
+(``WORKER_CENSUS.jsonl``, last held by commit 31e3c2a), where
 ``similarity_knn_clusters`` rebuilt 31 workers inside its own timing.
 
 The fix is the classic pre-fork trick: ``spark.python.daemon.module``
@@ -54,7 +55,7 @@ import importlib
 # matters: an uncapped preload hands every forked worker a broken
 # 32-thread OpenBLAS server that re-initializes per child — measured
 # 97.8 s of pool CPU for similarity_knn_clusters' 31-worker stage vs
-# 32.3 s pinned (WORKER_CENSUS.jsonl r12o vs ctlA).
+# 32.3 s pinned (r12o vs ctlA in WORKER_CENSUS.jsonl at commit 31e3c2a).
 
 for _mod in ("numpy", "pandas", "pyarrow", "pyarrow.parquet"):
     try:
